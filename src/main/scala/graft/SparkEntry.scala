@@ -129,11 +129,11 @@ object SparkEntry {
       // nothing the 4 serialized stage materializations don't cost
       // several times over), so adaptive re-planning is pure
       // scheduling overhead here: 0.96 → 0.66 s warm medians
-      // (ProfileQ08). NOT applied class-wide — the same A/B measured
-      // q207 0.78→0.90 and q193 0.42→0.73 WORSE, so only this
-      // verdict-named gate takes it, on a child session so nothing
-      // leaks, with the AQE plan one conf away (row-identical, same
-      // oracle).
+      // (BASELINE.md, "Round-16: q08"). NOT applied class-wide — the
+      // same A/B measured q207 0.78→0.90 and q193 0.42→0.73 WORSE, so
+      // only this verdict-named gate takes it, on a child session so
+      // nothing leaks, with the AQE plan one conf away (row-identical,
+      // same oracle).
       val s2 =
         if (s.conf.get("spark.graft.q08.adaptive", "false").toBoolean) s
         else {

@@ -19,9 +19,9 @@ import scala.jdk.CollectionConverters._
   * membership sketches, time-travel snapshots): a manifest probe or
   * commit is a metadata operation — one row per data file — and
   * running it as a Spark job charges a full job/stage/task cycle
-  * (~60–80 ms each, ~15 per lifecycle gate measured by `ProfileJobs`
-  * in r15) for reading a few KB. This is the same posture as every
-  * table format's metadata layer: Delta/Iceberg commits and manifest
+  * (~60–80 ms each, ~15 per lifecycle gate; BASELINE.md, "Round-16:
+  * lifecycle manifest probes moved driver-side") for reading a few
+  * KB. This is the same posture as every table format's metadata layer: Delta/Iceberg commits and manifest
   * scans are driver/metadata-side, bounded by manifest size, with the
   * data files themselves still read distributed.
   *

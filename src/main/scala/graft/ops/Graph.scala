@@ -177,7 +177,8 @@ object Graph {
     * immediately), so the one unavoidable big-big join on orderkey
     * carries a 4-byte nation id per side instead of dragging the
     * 8-byte supp/cust keys through the shuffle to be resolved after —
-    * measured 4.8 → 3.3 s on the 100× decade (`ProfileGraphDerive`;
+    * measured 4.8 → 3.3 s on the 100× decade (BASELINE.md, "Round-15:
+    * graph edge derivation";
     * pre-aggregating lineitem before the big join was also measured
     * and REJECTED: the high-cardinality (orderkey, nation) hash agg
     * costs 2-3× more than it saves). customer/supplier scale WITH the

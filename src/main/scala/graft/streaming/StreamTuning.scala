@@ -3,13 +3,13 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 /** Shared session tuning for the streaming harnesses (r16 brief
-  * item 3, measured first by `graft.ProfileStreamStart`): the
-  * checkpoint file manager is the dominant per-run cost on local
-  * filesystems — the FileContext-based DEFAULT pays roughly 2× the
-  * metadata-op cost of Spark's own FileSystem-based alternative for
-  * the offset/commit/state-delta log writes every micro-batch commits
-  * (a minimal session-window run drops 1.6 → 0.8 s with nothing else
-  * changed). Both managers implement the same rename-based atomic
+  * item 3, measured in BASELINE.md, "Round-16: streaming-query
+  * startup"): the checkpoint file manager is the dominant per-run
+  * cost on local filesystems — the FileContext-based DEFAULT pays
+  * roughly 2× the metadata-op cost of Spark's own FileSystem-based
+  * alternative for the offset/commit/state-delta log writes every
+  * micro-batch commits (a minimal session-window run drops 1.6 →
+  * 0.8 s with nothing else changed). Both managers implement the same rename-based atomic
   * commit protocol; Spark itself falls back to the FileSystem-based
   * one wherever FileContext is unavailable, so this is a supported
   * production posture, not a bench trick. Overridable per deployment

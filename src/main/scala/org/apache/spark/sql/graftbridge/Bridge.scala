@@ -37,6 +37,11 @@ object Bridge {
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
 
+  /** Block until every event posted so far reached every listener
+    * (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a function into an already-running session's registry
     * (extensions only apply at session construction). */
   def registerFunction(spark: SparkSession, name: String,
